@@ -11,6 +11,8 @@ import threading
 
 _TICK = os.sysconf("SC_CLK_TCK")
 _PAGE = os.sysconf("SC_PAGE_SIZE")
+_SAMPLE_PERIOD_S = 0.1  # how often the RSS of the tree is summed
+_RESCAN_EVERY = 5  # samples between rescans of /proc for new processes
 
 
 def _stat_fields(pid: int) -> list[str] | None:
@@ -67,10 +69,8 @@ class TreeMonitor:
     its CPU seconds and peak RSS.
     """
 
-    def __init__(self, root: int, period_s: float = 0.1, rescan_every: int = 5):
+    def __init__(self, root: int):
         self.root = root
-        self.period_s = period_s
-        self.rescan_every = rescan_every
         self._lock = threading.Lock()
         self._peak = 0
         self._stop = threading.Event()
@@ -89,9 +89,9 @@ class TreeMonitor:
 
     def _loop(self) -> None:
         pids, n = tree_pids(self.root), 0
-        while not self._stop.wait(self.period_s):
+        while not self._stop.wait(_SAMPLE_PERIOD_S):
             n += 1
-            if n % self.rescan_every == 0:
+            if n % _RESCAN_EVERY == 0:
                 pids = tree_pids(self.root)
             rss = rss_bytes(pids)
             with self._lock:

@@ -1,8 +1,10 @@
 """Self-test of the benchmark at tiny input sizes.
 
-Checks that ``BENCHMARK.json`` and ``metrics.py`` agree, that every
-workload emits every end-to-end metric untraced and every per-layer metric
-traced with the declared unit, that its outputs pass their checks, and that
+Checks that ``BENCHMARK.json`` and ``metrics.py`` name the same per-layer
+metrics, that every workload emits every end-to-end metric untraced
+(each above zero) and every per-layer metric traced with the declared
+unit, that each layer reads non-zero on the workloads that run it and
+zero on those that do not, that the outputs pass their checks, and that
 the benchmark exits non-zero without a result when the package is absent.
 
     python3 perfbench/selftest.py
@@ -22,6 +24,28 @@ sys.path.insert(0, HERE)
 
 import metrics  # noqa: E402
 import workloads  # noqa: E402
+from run import declared  # noqa: E402
+
+_PARSE = ["parse.vote_s", "parse.py_run_s", "parse.py_init_s", "parse.arrow_in_bytes",
+          "parse.arrow_out_bytes", "parse.rows_out", "scan.bytes"]
+_SESSIONIZE = ["sessionize.shuffle_bytes", "sessionize.fetch_wait_s", "sessionize.py_run_s"]
+# local-mode shuffle fetches may wait 0 ms even when the shuffle ran
+_SESSIONIZE_RAN = ["sessionize.shuffle_bytes", "sessionize.py_run_s"]
+_ROUTE = ["route.write_s", "route.count_s", "route.task_commit_s", "route.job_commit_s",
+          "route.shuffle_bytes", "route.files", "route.bytes"]
+
+# per-layer metrics that must read above zero on a workload: its layers ran
+NONZERO = {
+    "ingest_route": [*_PARSE, "route.files", "route.bytes"],
+    "merge_window": [*_PARSE, "filters.rows_in", "filters.rows_out", "merge.sort_s"],
+    "resumable_pipeline": [*_PARSE, *_SESSIONIZE_RAN, "yearfix.py_run_s", "route.files", "pipeline.jobs"],
+}
+# ... and those that must read zero: the workload does not run the layer
+ZERO = {
+    "ingest_route": _SESSIONIZE,
+    "merge_window": [*_SESSIONIZE, *_ROUTE],
+    "resumable_pipeline": [],
+}
 
 
 def _run(args: list[str], cwd: str = ROOT) -> subprocess.CompletedProcess:
@@ -30,22 +54,16 @@ def _run(args: list[str], cwd: str = ROOT) -> subprocess.CompletedProcess:
 
 
 def check_declarations() -> None:
+    if list(declared(1)) != list(metrics.MOVES):
+        raise SystemExit(f"BENCHMARK.json per_layer and metrics.MOVES name different metrics: {list(declared(1))}")
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        bench = json.load(f)
-    declared = [(m["name"], m["unit"], m["better"], m["bound"]) for m in bench["end_to_end"]]
-    if declared != metrics.END_TO_END:
-        raise SystemExit(f"BENCHMARK.json end_to_end differs from metrics.py: {declared}")
-    declared = [(m["name"], m["unit"], m["better"]) for m in bench["per_layer"]]
-    if declared != [m[:3] for m in metrics.PER_LAYER]:
-        raise SystemExit(f"BENCHMARK.json per_layer differs from metrics.py: {declared}")
-    unknown = {w["name"] for w in bench["workloads"]} - set(workloads.WORKLOADS)
+        unknown = {w["name"] for w in json.load(f)["workloads"]} - set(workloads.WORKLOADS)
     if unknown:
         raise SystemExit(f"BENCHMARK.json names unknown workloads: {unknown}")
 
 
 def check_emitted(trace: int) -> None:
-    table = metrics.PER_LAYER if trace else metrics.END_TO_END
-    want = {m[0]: m[1] for m in table}
+    want = declared(trace)
     proc = _run(["--workload", "all", "--seed", "7", "--seconds", "1", "--trace", str(trace), "--size", "tiny"])
     if proc.returncode:
         raise SystemExit(f"trace {trace}: exit {proc.returncode}\n{proc.stderr[-3000:]}")
@@ -59,6 +77,14 @@ def check_emitted(trace: int) -> None:
         for name, unit in want.items():
             if got[name]["unit"] != unit or not isinstance(got[name]["value"], (int, float)):
                 raise SystemExit(f"trace {trace}, {wl}: bad {name}: {got[name]}")
+        value = {name: m["value"] for name, m in got.items()}
+        if trace:
+            bad = {n: value[n] for n in NONZERO[wl] if not value[n] > 0}
+            bad.update({n: value[n] for n in ZERO[wl] if value[n] != 0})
+        else:
+            bad = {n: v for n, v in value.items() if not v > 0}
+        if bad:
+            raise SystemExit(f"trace {trace}, {wl}: values out of range: {bad}")
     print(f"trace {trace}: {len(want)} metrics emitted for each of {len(workloads.WORKLOADS)} workloads")
 
 
