@@ -1,10 +1,11 @@
 """Seeded log-pipeline benchmark.
 
 Runs one workload through the package's public functions on ``local[N]``
-(N = usable cores) for a fixed time, checks every run's output against the
-generator's golden messages, and prints one JSON result as its last line.
+(N = usable cores less one) for a fixed time, checks every run's output
+against the generator's golden messages, and prints one JSON result as its
+last line.
 
-    python3 perfbench/run.py --workload merge_window --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload merge_window --seed 1 --seconds 20 --trace 0
 
 ``--trace 0`` reports the end-to-end metrics; ``--trace 1`` runs traced
 and untraced runs in turn and reports the per-layer metrics read from
@@ -42,8 +43,11 @@ def declared(trace: int) -> dict[str, str]:
     return {m["name"]: m["unit"] for m in bench["per_layer" if trace else "end_to_end"]}
 
 
-def _cores() -> int:
-    return len(os.sched_getaffinity(0))
+def _spark_cores(nproc: int) -> int:
+    """One Spark task thread fewer than the cores: the driver process, the
+    JVM's own threads and the host's other work keep a core. On 4 cores
+    local[3] ran as fast as local[4]."""
+    return max(1, nproc - 1)
 
 
 def _driver_mem_gib() -> int:
@@ -89,11 +93,18 @@ def _git_sha() -> str | None:
     return out.stdout.strip() or None
 
 
-def _cpu_probe(cores: int) -> dict:
+def _host_steal_s() -> float:
+    """Seconds this machine's cores were ready to run but the hypervisor
+    ran other work, summed over the cores (``/proc/stat``)."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
+
+
+def _cpu_probe(nproc: int) -> dict:
     """``tools/cpu_probe.py``: single-core time and effective cores of a
     fixed N-way CPU load, so a throttled host shows in the record."""
     probe = os.path.join(ROOT, "tools", "cpu_probe.py")
-    out = subprocess.run([sys.executable, probe, str(cores)], capture_output=True, text=True, timeout=120, check=True)
+    out = subprocess.run([sys.executable, probe, str(nproc)], capture_output=True, text=True, timeout=120, check=True)
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
@@ -220,6 +231,7 @@ def _measure(args, wl, inputs, cores: int, extra_conf: dict, record: dict) -> Ru
             record["spark_conf"] = dict(spark.sparkContext.getConf().getAll())
             reader = StatusReader(spark) if args.trace else None
 
+            steal0 = _host_steal_s()
             deadline = time.perf_counter() + args.seconds
             i = 0
             while True:
@@ -261,6 +273,7 @@ def _measure(args, wl, inputs, cores: int, extra_conf: dict, record: dict) -> Ru
                 now = time.perf_counter()
                 if now >= deadline and (runs.walls and (runs.layers or not args.trace)) or now >= deadline + 60:
                     break
+            record["host_steal_s"] = _host_steal_s() - steal0
     finally:
         if spark is not None:
             _stop_spark(spark)
@@ -271,7 +284,8 @@ def _measure(args, wl, inputs, cores: int, extra_conf: dict, record: dict) -> Ru
 
 
 def run_workload(args) -> int:
-    cores = _cores()
+    nproc = len(os.sched_getaffinity(0))
+    cores = _spark_cores(nproc)
     extra_conf = _configure_env(cores)
     sys.path.insert(0, ROOT)
     try:
@@ -286,18 +300,22 @@ def run_workload(args) -> int:
     stamp = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%S")
     record: dict = {
         "workload": wl.name, "seed": args.seed, "size": args.size, "trace": args.trace,
-        "seconds": args.seconds, "git_sha": _git_sha(), "nproc": cores, "master": f"local[{cores}]",
+        "seconds": args.seconds, "git_sha": _git_sha(), "nproc": nproc, "master": f"local[{cores}]",
         "n_docs": inputs.n_docs, "started": stamp,
     }
     with _host_lock(f"perfbench {wl.name}", record):
-        record["probe_before"] = _cpu_probe(cores)
+        # the probes (~2 s each) feed the traced run's host.cores_* metrics;
+        # untraced runs record only the steal time, which costs nothing
+        if args.trace:
+            record["probe_before"] = _cpu_probe(nproc)
         try:
             runs = _measure(args, wl, inputs, cores, extra_conf, record)
         except Exception as exc:
             print(f"perfbench: {wl.name} failed: {exc!r}", file=sys.stderr)
             traceback.print_exc(file=sys.stderr)
             return 1
-        record["probe_after"] = _cpu_probe(cores)
+        if args.trace:
+            record["probe_after"] = _cpu_probe(nproc)
     if not runs.walls or (args.trace and not runs.layers):
         print("perfbench: no run succeeded", file=sys.stderr)
         return 1

@@ -58,11 +58,15 @@ def make_inputs(work: str, workload: str, seed: int, size: str, n_files: int) ->
     """Generate (or reuse) the parquet inputs of one (workload, seed, size)."""
     from super_speedy_syslog_searcher_spark.sources.tokenized import gen_corpus
 
-    root = os.path.join(work, "inputs", f"{workload}-{size}-seed{seed}")
+    args = SIZES[workload][size]
+    # the generator arguments are part of the key, so a resized workload
+    # never reads inputs cached at another size
+    tag = hashlib.blake2b(repr(sorted({**args, "n_files": n_files}.items())).encode(), digest_size=4).hexdigest()
+    root = os.path.join(work, "inputs", f"{workload}-{size}-seed{seed}-{tag}")
     ready = os.path.join(root, "_READY")
     if not os.path.exists(ready):
         shutil.rmtree(root, ignore_errors=True)
-        docs, enrichment, golden = gen_corpus(seed=seed, **SIZES[workload][size])
+        docs, enrichment, golden = gen_corpus(seed=seed, **args)
         os.makedirs(os.path.join(root, "docs"))
         table = pa.Table.from_pandas(docs, preserve_index=False)
         for k in range(n_files):  # several files so the scan has a task per core
