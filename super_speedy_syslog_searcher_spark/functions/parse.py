@@ -444,6 +444,21 @@ def vote_patterns_fused(
     return _elect([(r["source"], r["pid"], r["cnt"]) for r in counts])
 
 
+def _parse_doc_lines(
+    pdf: pd.DataFrame, locked_map: dict[str, int], tz_min: int, reference_year: int | None
+) -> pd.DataFrame:
+    """One Arrow batch of docs → its lines (LINES_SCHEMA, in doc then line
+    order) with the parse columns filled in."""
+    from .codec import split_docs_batch
+
+    lines = split_docs_batch(pdf["doc_id"].to_numpy(), pdf["source"].to_numpy(), pdf["tokens"])
+    locked = lines["source"].map(locked_map) if locked_map else None
+    p = parse_series(lines["text"], default_tz_minutes=tz_min, reference_year=reference_year, locked=locked)
+    for c in ("ts", "ts_ns", "dt_beg", "dt_end", "pattern_id"):
+        lines[c] = p[c].to_numpy() if c != "ts" else p[c]
+    return lines
+
+
 def parse_docs_fused(
     docs: DataFrame,
     default_tz: str = "+00:00",
@@ -463,7 +478,7 @@ def parse_docs_fused(
     """
     from collections.abc import Iterator
 
-    from .codec import LINES_SCHEMA, split_docs_batch
+    from .codec import LINES_SCHEMA
 
     locked_map: dict[str, int] = {}
     if lock_patterns:
@@ -484,42 +499,32 @@ def parse_docs_fused(
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            lines = split_docs_batch(pdf["doc_id"].to_numpy(), pdf["source"].to_numpy(), pdf["tokens"])
-            locked = lines["source"].map(locked_map) if locked_map else None
-            p = parse_series(
-                lines["text"], default_tz_minutes=tz_min, reference_year=reference_year, locked=locked
-            )
-            for c in ("ts", "ts_ns", "dt_beg", "dt_end", "pattern_id"):
-                lines[c] = p[c].to_numpy() if c != "ts" else p[c]
-            yield lines
+            yield _parse_doc_lines(pdf, locked_map, tz_min, reference_year)
 
     return docs.select("doc_id", "source", "tokens").mapInPandas(_gen, schema=schema)
 
 
-def parse_messages_fused(
+def _messages_kernel(
     docs: DataFrame,
-    default_tz: str = "+00:00",
-    reference_year: int | None = None,
-    lock_patterns: bool = True,
+    default_tz: str,
+    reference_year: int | None,
+    lock_patterns: bool,
+    doc_rows: bool,
     sample_lines_per_doc: int = 8,
     vote_doc_sample_mod: int = 20,
     locked_map: dict[str, int] | None = None,
-) -> DataFrame:
-    """Fully-fused docs → MESSAGES: token split + datetime parse +
-    sessionization in ONE mapInPandas stage, ZERO shuffles.
-
-    Valid because the input is doc-grained (input_hint): every doc's lines
-    are contiguous inside the stage by construction, so message grouping
-    is partition-local — the Spark realization of the reference's
-    single-thread-per-file pass (find_line → find_datetime_in_line →
-    sysline assembly, /root/reference/src/readers/syslinereader.rs:
-    1976-2192) with no cross-task coordination. The line-grained
-    ``sessionize`` operator remains for inputs that arrive as loose lines.
-    """
+):
+    """The fused docs → messages kernel body: token split, datetime parse,
+    sysline assembly and (given ``reference_year``) the missing-year fix,
+    all on one Arrow batch of whole docs. With ``doc_rows`` each batch also
+    yields one row per doc (``msg_no = 0``) whose ``n_lines`` / ``n_chars``
+    count the doc's leading datetime-less lines and their characters, and
+    which alone fills the ``input_file`` and ``partition_id`` columns. Runs
+    the P9 vote unless ``locked_map`` is given."""
     from collections.abc import Iterator
 
-    from ..operators.sessionize import MESSAGES_SCHEMA, _emit_messages
-    from .codec import split_docs_batch
+    from ..operators.sessionize import _emit_messages, message_numbers
+    from ..operators.yearfix import fix_years_batch
 
     if locked_map is None:
         locked_map = {}
@@ -532,16 +537,88 @@ def parse_messages_fused(
 
     def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            lines = split_docs_batch(pdf["doc_id"].to_numpy(), pdf["source"].to_numpy(), pdf["tokens"])
-            locked = lines["source"].map(locked_map) if locked_map else None
-            p = parse_series(
-                lines["text"], default_tz_minutes=tz_min, reference_year=reference_year, locked=locked
-            )
-            for c in ("ts", "ts_ns", "dt_beg", "dt_end", "pattern_id"):
-                lines[c] = p[c].to_numpy() if c != "ts" else p[c]
-            yield _emit_messages(lines)
+            lines = _parse_doc_lines(pdf, locked_map, tz_min, reference_year)
+            msgs = _emit_messages(lines)
+            if reference_year is not None:
+                msgs = fix_years_batch(msgs, reference_year)
+            if doc_rows:
+                lead = lines.loc[message_numbers(lines) == 0]
+                msgs = pd.concat([msgs, _doc_rows(pdf, lead)], ignore_index=True)
+            yield msgs
 
-    return docs.select("doc_id", "source", "tokens").mapInPandas(_gen, schema=MESSAGES_SCHEMA)
+    return _gen
+
+
+def _doc_rows(pdf: pd.DataFrame, lead: pd.DataFrame) -> pd.DataFrame:
+    """The ``msg_no = 0`` row of each doc of the batch; ``lead`` holds the
+    batch's leading datetime-less lines. Columns left out arrive NULL."""
+    doc_id = pdf["doc_id"]
+    return pdf[["doc_id", "source", "input_file", "partition_id"]].assign(
+        msg_no=0,
+        ts=pd.Series(pd.NaT, index=pdf.index, dtype="datetime64[ns, UTC]"),
+        tokens=None,  # an array column takes None, not concat's NaN, as NULL
+        n_lines=doc_id.map(lead.groupby("doc_id").size()).fillna(0),
+        n_chars=doc_id.map(lead["text"].str.len().groupby(lead["doc_id"]).sum()).fillna(0),
+    )
+
+
+def parse_messages_fused(
+    docs: DataFrame,
+    default_tz: str = "+00:00",
+    reference_year: int | None = None,
+    lock_patterns: bool = True,
+    sample_lines_per_doc: int = 8,
+    vote_doc_sample_mod: int = 20,
+    locked_map: dict[str, int] | None = None,
+) -> DataFrame:
+    """Fully-fused docs → MESSAGES: token split + datetime parse +
+    sessionization + missing-year fix in ONE mapInPandas stage, ZERO
+    shuffles.
+
+    Valid because the input is doc-grained (input_hint): every doc's lines
+    are contiguous inside the stage by construction, so message grouping
+    and the year fix are partition-local — the Spark realization of the
+    reference's single-thread-per-file pass (find_line →
+    find_datetime_in_line → sysline assembly,
+    src/readers/syslinereader.rs:1976-2192 in the reference, then
+    process_missing_year, syslogprocessor.rs:604-712) with no cross-task
+    coordination. The line-grained ``sessionize`` and ``infer_years``
+    operators remain for inputs that arrive as loose lines.
+    """
+    from ..operators.sessionize import MESSAGES_SCHEMA
+
+    gen = _messages_kernel(
+        docs, default_tz, reference_year, lock_patterns, doc_rows=False,
+        sample_lines_per_doc=sample_lines_per_doc, vote_doc_sample_mod=vote_doc_sample_mod,
+        locked_map=locked_map,
+    )
+    return docs.select("doc_id", "source", "tokens").mapInPandas(gen, schema=MESSAGES_SCHEMA)
+
+
+def parse_messages_with_doc_rows(
+    docs: DataFrame,
+    default_tz: str = "+00:00",
+    reference_year: int | None = None,
+    lock_patterns: bool = True,
+) -> DataFrame:
+    """``parse_messages_fused`` plus one ``msg_no = 0`` row per doc and
+    the ``input_file`` / ``partition_id`` columns (see
+    ``_messages_kernel``): the input of
+    ``plans.pipeline``, whose counters need the lines that belong to no
+    message and the files and partitions each doc was read from.
+    ``input_file_name()`` and ``spark_partition_id()`` are taken at the
+    scan, before the Python stage."""
+    from ..operators.sessionize import MESSAGES_SCHEMA
+
+    gen = _messages_kernel(docs, default_tz, reference_year, lock_patterns, doc_rows=True)
+    scan = docs.select(
+        "doc_id",
+        "source",
+        "tokens",
+        F.input_file_name().alias("input_file"),
+        F.spark_partition_id().alias("partition_id"),
+    )
+    return scan.mapInPandas(gen, schema=f"{MESSAGES_SCHEMA}, input_file string, partition_id int")
 
 
 def vote_lines_from_docs(

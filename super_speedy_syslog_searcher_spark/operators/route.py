@@ -6,7 +6,10 @@ generalizes to fan-out sinks keyed by ``sink_key = facility.severity_class``.
 
 Spark realization: a single ``write.partitionBy("sink_key")`` — one job,
 no per-sink re-scan; dynamic partition overwrite keeps re-runs idempotent
-per sink. Output stays PARQUET (Iceberg jars are absent in the sandbox —
+per sink. The sink files make no promise about row order (the writer
+sorts each task's rows by sink_key, so any order given upstream is
+lost); the merged stream in the reference's order is
+``plans.pipeline.run_pipeline(...)["merged"]``. Output stays PARQUET (Iceberg jars are absent in the sandbox —
 writes go through ``catalog.py``-style path tables; the layout is
 Iceberg-compatible: partition column + snapshot-ish manifest in
 plans/pipeline.py).

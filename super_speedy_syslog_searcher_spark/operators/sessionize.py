@@ -40,21 +40,30 @@ MESSAGES_SCHEMA = (
 _IN_COLS = ["doc_id", "source", "line_no", "line_tokens", "text", "ts", "ts_ns", "dt_beg", "dt_end", "pattern_id"]
 
 
-def _emit_messages(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized message assembly for a block of COMPLETE docs, already
-    sorted by (doc_id, line_no)."""
+def message_numbers(pdf: pd.DataFrame) -> np.ndarray:
+    """msg_no of each line of a block of COMPLETE docs sorted by (doc_id,
+    line_no): the running count of datetime lines within its doc, 0 for the
+    leading datetime-less lines that belong to no message."""
     if len(pdf) == 0:
-        return _empty_messages()
+        return np.zeros(0, dtype=np.int64)
     flag = pdf["ts"].notna().to_numpy()
     doc = pdf["doc_id"].to_numpy()
     new_doc = np.empty(len(pdf), dtype=bool)
     new_doc[0] = True
     new_doc[1:] = doc[1:] != doc[:-1]
-    # msg_no = running count of datetime lines within each doc
     flag_i = flag.astype(np.int64)
     csum = np.cumsum(flag_i)
     doc_base = np.maximum.accumulate(np.where(new_doc, csum - flag_i, 0))
-    msg_no = csum - doc_base  # 0 for leading datetime-less lines
+    return csum - doc_base
+
+
+def _emit_messages(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Vectorized message assembly for a block of COMPLETE docs, already
+    sorted by (doc_id, line_no)."""
+    if len(pdf) == 0:
+        return _empty_messages()
+    doc = pdf["doc_id"].to_numpy()
+    msg_no = message_numbers(pdf)
     keep = msg_no > 0
     if not keep.any():
         return _empty_messages()
@@ -157,21 +166,6 @@ def sessionize(parsed_lines: DataFrame, num_partitions: int | None = None) -> Da
         .sortWithinPartitions("doc_id", "line_no")
     )
     return df.mapInPandas(_sessionize_batches, schema=MESSAGES_SCHEMA)
-
-
-def dropped_leading_lines(parsed_lines: DataFrame) -> DataFrame:
-    """Summary-path helper: count per (doc, source) the leading
-    datetime-less lines that belong to no message (A2 'lines dropped')."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id").orderBy("line_no").rowsBetween(Window.unboundedPreceding, 0)
-    flag = F.when(F.col("ts").isNotNull(), 1).otherwise(0)
-    return (
-        parsed_lines.withColumn("msg_no", F.sum(flag).over(w))
-        .filter(F.col("msg_no") == 0)
-        .groupBy("source")
-        .agg(F.count("*").alias("lines_dropped"))
-    )
 
 
 def event_transitions(

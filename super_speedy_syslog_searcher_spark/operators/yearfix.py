@@ -15,8 +15,9 @@ Vectorization: instead of a sequential backwards walk we compute, per doc,
 the month-day ordering at a UNIFORM year and take a reversed cumulative sum
 of ">25h forward jump" flags — equivalent to the sequential rule whenever
 each rollover is itself a >25h month-day jump (always true for Dec→Jan).
-Runs as one mapInPandas pass over doc-sorted partitions (same
-shuffle-free-after-sessionize layout; messages arrive sorted by msg_no).
+``fix_years_batch`` does this for a whole Arrow batch of docs at once (the
+cumulative sum restarts at each doc boundary); the fused parse kernel and
+``infer_years`` both call it. ``fix_years_pdf`` is the one-doc form.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.parse import NOYEAR_PATTERN_IDS
+from ..functions.parse import NOYEAR_PATTERN_IDS, _civil_to_epoch_days
 
 BACKWARDS_TIME_JUMP_MEANS_NEW_YEAR_HOURS = 25
 
@@ -64,11 +65,58 @@ def fix_years_pdf(pdf: pd.DataFrame, reference_year: int) -> pd.DataFrame:
     dec = np.concatenate((np.cumsum(jumps[::-1])[::-1], [0]))
     year = reference_year - dec
     comp["year"] = year
-    fixed = pd.to_datetime(comp, errors="coerce", utc=True) + pd.to_timedelta(us, unit="us")
+    us = pd.to_timedelta(us, unit="us")
+    fixed = pd.to_datetime(comp, errors="coerce", utc=True) + us
     # leap-day at a non-leap target year → keep the uniform-year value
-    fixed = fixed.fillna(uni)
+    fixed = fixed.fillna(uni + us)
     out_ts = ts.copy()
     out_ts[mask] = fixed
+    pdf = pdf.copy()
+    pdf["ts"] = out_ts
+    return pdf
+
+
+_NS_PER_DAY = 86_400_000_000_000
+
+
+def fix_years_batch(pdf: pd.DataFrame, reference_year: int) -> pd.DataFrame:
+    """``fix_years_pdf`` over a batch of WHOLE docs in one pass: each doc's
+    rows contiguous and in msg_no order, docs told apart by ``doc_id``.
+
+    The reversed cumulative sum of jump flags runs over the whole batch and
+    is cut at every doc boundary; the calendar rebuild is day arithmetic
+    on the UTC month-day and time of day. Precondition (holds for anything
+    ``parse_series`` parsed with the same ``reference_year``): every
+    no-year row's month-day exists in ``reference_year``."""
+    mask = pdf["pattern_id"].isin(NOYEAR_PATTERN_IDS).to_numpy()
+    if not mask.any():
+        return pdf
+    ts = pdf["ts"]
+    if ts.dt.tz is None:  # Arrow batches arrive UTC-naive (session tz UTC)
+        ts = ts.dt.tz_localize("UTC")
+    sub = ts[mask]
+    ns = sub.dt.tz_convert(None).to_numpy().astype("datetime64[ns]").view(np.int64)
+    month = sub.dt.month.to_numpy(np.int64)
+    day = sub.dt.day.to_numpy(np.int64)
+    tod = np.mod(ns, _NS_PER_DAY)
+    uni_days = _civil_to_epoch_days(np.full(len(ns), reference_year, np.int64), month, day)
+    uni_s = uni_days * 86_400 + tod // 1_000_000_000
+    doc = pdf["doc_id"].to_numpy()[mask]
+    same_doc = doc[:-1] == doc[1:]
+    jump_s = BACKWARDS_TIME_JUMP_MEANS_NEW_YEAR_HOURS * 3600
+    jumps = np.append((uni_s[:-1] - uni_s[1:]) > jump_s, False)
+    rcum = np.cumsum(jumps[::-1])[::-1]
+    # minus rcum at the doc's last row: what is left counts the jumps from
+    # the row up to that last row, so never one across the doc boundary
+    last = np.flatnonzero(np.append(~same_doc, True))
+    doc_no = np.concatenate(([0], np.cumsum(~same_doc)))
+    year = reference_year - (rcum - rcum[last[doc_no]])
+    # Feb 29 at a non-leap target year → keep the uniform-year value
+    leap = (year % 4 == 0) & ((year % 100 != 0) | (year % 400 == 0))
+    year = np.where((month == 2) & (day == 29) & ~leap, reference_year, year)
+    fixed = _civil_to_epoch_days(year, month, day) * _NS_PER_DAY + tod
+    out_ts = ts.copy()
+    out_ts[mask] = pd.DatetimeIndex(fixed.view("datetime64[ns]")).tz_localize("UTC")
     pdf = pdf.copy()
     pdf["ts"] = out_ts
     return pdf
@@ -107,8 +155,7 @@ def infer_years(messages: DataFrame, reference_year: int, num_partitions: int | 
             yield _fix_block(pending)
 
     def _fix_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts = [fix_years_pdf(g.reset_index(drop=True), reference_year) for _, g in pdf.groupby("doc_id", sort=False)]
-        return pd.concat(parts, ignore_index=True)[cols]
+        return fix_years_batch(pdf, reference_year)[cols]
 
     fixed = (
         todo.repartition(n, "doc_id")

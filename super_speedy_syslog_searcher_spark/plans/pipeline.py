@@ -1,16 +1,31 @@
-"""End-to-end pipeline: parse → enrich → route → aggregate.
+"""End-to-end pipeline: fused kernel → enrich → routed write → one stats
+aggregate.
 
 The Spark lifecycle equivalent of ``s4 <PATHS> -a A -b B`` (SURVEY §3.3):
 
-    read docs table → explode lines (narrow) → two-pass DTPD parse (narrow
-    + one broadcast of pattern votes) → sessionize (shuffle #1: doc_id) →
-    year-fix (reuses doc_id partitioning) → filter ts BETWEEN a, b
-    (pushable) → broadcast-join enrichment → repartitionByRange(full sort
-    key) + sortWithinPartitions (shuffle #2) → fan-out write partitioned by
-    sink_key → summary aggregates.
+    read docs table → fused kernel (ONE mapInPandas over docs, after the
+    sampled P9 pattern vote: token split, DTPD parse, sysline assembly,
+    missing-year fix) → persist → filter ts BETWEEN a, b → broadcast-join
+    enrichment → write partitioned by sink_key → ONE grouped aggregate
+    over the persisted kernel output, collected.
 
-Exactly two wide dependencies at scale (sessionize hash, merge range); the
-enrichment join is broadcast; everything else is narrow Arrow-batched work.
+No shuffle before the routed write: a doc is one input row, so sysline
+assembly and the year fix are partition-local — the reference's single
+pass per file (syslinereader.rs:1976-2192, syslogprocessor.rs:604-712).
+The one wide dependency is the stats aggregate's, grouped on (source,
+pattern_id, kind ∈ {doc, in-window, out-of-window}) and joined to the
+enrichment's sink_key. Its collected result is bounded by
+|sources| × (2 × |DTPD table| + 1) rows (times the lookup rows per
+source) and, on the driver, becomes the per-sink counts, the summary
+rollup, the per-DTPD hit/miss counts and the lineage rows. That suffices
+because a line carries a pattern_id ≥ 0 exactly when it has a datetime
+(``parse_series``): per-pattern line hits are message counts, and misses
+are lines − messages; the kernel's one row per doc adds the leading
+datetime-less lines that belong to no message.
+
+Ordering: the routed sink files make no promise about row order. The
+merged stream in the reference's order is ``result["merged"]``, a lazy
+global sort that runs only when read.
 
 Checkpoint/resume + lineage (north_rule): each run writes per-source
 manifest rows after its sinks commit; a resume run anti-joins the input
@@ -25,20 +40,16 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from datetime import datetime
+from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codec import explode_lines
-from ..functions.parse import parse_lines
+from ..functions.parse import parse_messages_with_doc_rows
 from ..operators.enrich import enrich
-from ..operators.filters import dt_between
+from ..operators.filters import dt_after_or_before, dt_between
 from ..operators.merge import global_sort, with_source_order
-from ..operators.route import route_write, sink_counts
-from ..operators.sessionize import sessionize
-from ..operators.summary import pattern_hit_miss, source_summary
-from ..operators.yearfix import infer_years
+from ..operators.route import route_write
 
 
 @dataclass
@@ -53,23 +64,145 @@ class PipelineConfig:
     extra: dict = field(default_factory=dict)
 
 
-def parse_stage(docs: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """docs → parsed lines (single fused Python stage, no shuffle)."""
-    from ..functions.parse import parse_docs_fused
+SINK_COUNTS_SCHEMA = (
+    "sink_key string NOT NULL, messages bigint NOT NULL, lines bigint, bytes bigint, "
+    "dt_first timestamp, dt_last timestamp"
+)
+SUMMARY_SCHEMA = (
+    "source string, lines_processed bigint NOT NULL, lines_with_dt bigint, "
+    "lines_dropped bigint NOT NULL, bytes_processed bigint, syslines bigint NOT NULL, "
+    "dt_first timestamp, dt_last timestamp"
+)
+PATTERN_COUNTS_SCHEMA = "source string, pattern_id int, n bigint NOT NULL, kind string NOT NULL"
+MANIFEST_SCHEMA = (
+    "source string, n_messages bigint NOT NULL, dt_first timestamp, dt_last timestamp, "
+    "n_docs bigint, n_input_files bigint, n_partitions bigint, "
+    "patterns_used array<int> NOT NULL, pattern_hits map<int,bigint> NOT NULL, "
+    "n_lines_missed bigint NOT NULL, completed_at double NOT NULL, run_id string NOT NULL"
+)
 
-    return parse_docs_fused(
+
+def _stats(kernel: DataFrame, enrichment: DataFrame, cfg: PipelineConfig) -> list[Row]:
+    """The one aggregate over the kernel output. ``kind`` is ``doc`` for the
+    per-doc rows, else whether the message passes the -a/-b window."""
+    in_window = dt_after_or_before(F.col("ts"), cfg.dt_a, cfg.dt_b)
+    kind = F.when(F.col("msg_no") == 0, "doc").when(in_window, "in").otherwise("out")
+    agg = kernel.groupBy("source", "pattern_id", kind.alias("kind")).agg(
+        F.count("*").alias("n"),
+        F.sum("n_lines").alias("lines"),
+        F.sum("n_chars").alias("chars"),
+        # as epoch µs: exact on the driver whatever the Python time zone
+        F.unix_micros(F.min("ts")).alias("us_first"),
+        F.unix_micros(F.max("ts")).alias("us_last"),
+        F.size(F.collect_set("input_file")).alias("n_files"),
+        F.size(F.collect_set("partition_id")).alias("n_partitions"),
+    )
+    # aggregate first, then attach sink_key: a lookup with several rows for
+    # one source fans its messages out to several sinks, as in the routed
+    # write, and _unfanned keeps one copy of each aggregate row
+    return enrich(agg, enrichment).collect()
+
+
+def _unfanned(stats: list[Row]) -> list[Row]:
+    return list({(r.source, r.pattern_id, r.kind): r for r in stats}.values())
+
+
+def _ts(us: int | None) -> datetime | None:
+    return None if us is None else datetime(1970, 1, 1, tzinfo=timezone.utc) + timedelta(microseconds=us)
+
+
+def _by(rows: list[Row], key: str) -> dict:
+    out: dict = {}
+    for r in rows:
+        out.setdefault(r[key], []).append(r)
+    return out
+
+
+def _totals(rows: list[Row]) -> tuple:
+    """(messages, lines, chars, dt_first, dt_last) of message stats rows."""
+    return (
+        sum(r.n for r in rows),
+        sum(r.lines for r in rows),
+        sum(r.chars for r in rows),
+        _ts(min((r.us_first for r in rows if r.us_first is not None), default=None)),
+        _ts(max((r.us_last for r in rows if r.us_last is not None), default=None)),
+    )
+
+
+def _hits(rows: list[Row]) -> dict[int, int]:
+    """Line hits per DTPD pattern: a message starts at its one datetime line."""
+    hits: dict[int, int] = {}
+    for r in rows:
+        if r.kind != "doc":
+            hits[r.pattern_id] = hits.get(r.pattern_id, 0) + r.n
+    return hits
+
+
+def _summary_row(source: str | None, rows: list[Row]) -> tuple:
+    """≙ ``summary.source_summary`` over the rows of one source (or of all,
+    for the rollup row): every line is a doc's leading line or a message
+    line, and a message's text joins its lines with '\n'."""
+    msgs = [r for r in rows if r.kind != "doc"]
+    syslines, member_lines, _, dt_first, dt_last = _totals([r for r in msgs if r.kind == "in"])
+    lines = sum(r.lines for r in rows)
+    chars = sum(r.chars for r in rows) - sum(r.lines - r.n for r in msgs)
+    with_dt = sum(r.n for r in msgs)
+    return (source, lines, with_dt, lines - member_lines, chars, syslines, dt_first, dt_last)
+
+
+def _pattern_count_rows(source: str, rows: list[Row]) -> list[tuple]:
+    """≙ ``summary.pattern_hit_miss``: misses are pattern_id -1."""
+    hits = _hits(rows)
+    misses = sum(r.lines for r in rows) - sum(hits.values())
+    return [(source, p, n, "hit") for p, n in hits.items()] + ([(source, -1, misses, "miss")] if misses else [])
+
+
+def _run(
+    docs: DataFrame,
+    enrichment: DataFrame,
+    cfg: PipelineConfig,
+    out_dir: str | None,
+) -> tuple[dict[str, DataFrame], list[Row], DataFrame]:
+    """The pipeline run: (result frames, collected stats rows, the
+    persisted kernel output the lazy result frames read)."""
+    spark = docs.sparkSession
+    kernel = parse_messages_with_doc_rows(
         docs,
         default_tz=cfg.default_tz,
         reference_year=cfg.reference_year,
         lock_patterns=cfg.lock_patterns,
-    )
-
-
-def messages_stage(parsed_lines: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    msgs = sessionize(parsed_lines, num_partitions=cfg.num_partitions)
-    if cfg.reference_year is not None:
-        msgs = infer_years(msgs, cfg.reference_year, num_partitions=cfg.num_partitions)
-    return dt_between(msgs, cfg.dt_a, cfg.dt_b)
+    ).persist()
+    messages = dt_between(kernel.filter(F.col("msg_no") > 0).drop("input_file", "partition_id"), cfg.dt_a, cfg.dt_b)
+    enriched = enrich(messages, enrichment)
+    if out_dir:
+        route_write(enriched, os.path.join(out_dir, "routed"))
+    stats = _stats(kernel, enrichment, cfg)
+    by_source = _by(_unfanned(stats), "source")
+    in_window = [r for r in stats if r.kind == "in"]
+    sources = cfg.sources_in_order
+    if sources is None:
+        sources = sorted({r.source for r in in_window})
+    summary = [_summary_row(src, rows) for src, rows in by_source.items() if any(r.lines for r in rows)]
+    if summary:
+        summary.append(_summary_row(None, _unfanned(stats)))
+    result = {
+        "messages": messages,
+        "enriched": enriched,
+        # source_order from the collected stats: building it runs no job
+        "merged": global_sort(with_source_order(enriched, sources), num_partitions=cfg.num_partitions),
+        "sink_counts": spark.createDataFrame(
+            [(sink, *_totals(rows)) for sink, rows in _by(in_window, "sink_key").items()], SINK_COUNTS_SCHEMA
+        ),
+        "summary": spark.createDataFrame(summary, SUMMARY_SCHEMA),
+        "pattern_counts": spark.createDataFrame(
+            [row for src, rows in by_source.items() for row in _pattern_count_rows(src, rows)],
+            PATTERN_COUNTS_SCHEMA,
+        ),
+    }
+    if out_dir:
+        for name in ("sink_counts", "summary", "pattern_counts"):
+            result[name].write.mode("overwrite").parquet(os.path.join(out_dir, name))
+    return result, stats, kernel
 
 
 def run_pipeline(
@@ -78,45 +211,19 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
     out_dir: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Full run. Returns the named intermediate/​output DataFrames; if
-    ``out_dir`` is given, routed messages are fanned out to
-    ``out_dir/routed`` and summaries to ``out_dir/…``."""
-    cfg = cfg or PipelineConfig()
-    # parsed/messages feed several sinks (routed write, sink counts,
-    # summary, pattern counts) — persist so the UDF stages run once
-    parsed = parse_stage(docs, cfg).persist()
-    messages = messages_stage(parsed, cfg).persist()
-    enriched = enrich(messages, enrichment)
-    enriched = with_source_order(enriched, cfg.sources_in_order)
-    merged = global_sort(enriched, num_partitions=cfg.num_partitions, sources_in_order=cfg.sources_in_order)
-    result = {
-        "parsed_lines": parsed,
-        "messages": messages,
-        "enriched": enriched,
-        "merged": merged,
-        "sink_counts": sink_counts(enriched),
-        "summary": source_summary(parsed, messages),
-        "pattern_counts": pattern_hit_miss(parsed),
-    }
-    if out_dir:
-        route_write(merged.drop("source_order"), os.path.join(out_dir, "routed"))
-        result["sink_counts"].write.mode("overwrite").parquet(os.path.join(out_dir, "sink_counts"))
-        result["summary"].write.mode("overwrite").parquet(os.path.join(out_dir, "summary"))
-        result["pattern_counts"].write.mode("overwrite").parquet(os.path.join(out_dir, "pattern_counts"))
-    return result
+    """Full run. Returns the named output DataFrames: ``messages`` (in the
+    window), ``enriched``, ``merged`` (lazily sorted in the reference's
+    merge order), ``sink_counts``, ``summary`` and ``pattern_counts``. If
+    ``out_dir`` is given, the enriched messages are fanned out to
+    ``out_dir/routed`` (no row order promised within a sink) and the three
+    counter tables to ``out_dir/…``. The kernel output stays persisted for
+    the lazy frames."""
+    return _run(docs, enrichment, cfg or PipelineConfig(), out_dir)[0]
 
 
 # --------------------------------------------------------------------------
 # checkpoint / resume + lineage (M10)
 # --------------------------------------------------------------------------
-MANIFEST_SCHEMA = (
-    "source string, n_messages long, dt_first timestamp, dt_last timestamp, "
-    "n_docs long, n_input_files long, n_partitions long, "
-    "patterns_used array<int>, pattern_hits map<int,bigint>, "
-    "n_lines_missed long, completed_at double, run_id string"
-)
-
-
 def _manifest_path(checkpoint_dir: str) -> str:
     return os.path.join(checkpoint_dir, "manifest")
 
@@ -127,6 +234,25 @@ def read_manifest(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
         return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
     except Exception:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+
+
+def _lineage_rows(stats: list[Row], run_id: str) -> list[tuple]:
+    """One manifest row per input source — a source whose docs yield zero
+    messages (all lines datetime-less) is still "completed", otherwise it
+    would be reprocessed on every resume. ``n_messages`` counts routed rows
+    (lookup fan-out included); hits and misses are line-grained and
+    unwindowed (north_star: "parse hit/miss rates per DTPD pattern")."""
+    routed = _by([r for r in stats if r.kind == "in"], "source")
+    completed_at = time.time()
+    out = []
+    for src, rows in _by(_unfanned(stats), "source").items():
+        (doc,) = [r for r in rows if r.kind == "doc"]
+        _, lines, with_dt, _, _, _, dt_first, dt_last = _summary_row(src, rows)
+        n_routed = sum(r.n for r in routed.get(src, []))
+        used = sorted({r.pattern_id for r in rows if r.kind == "in"})
+        out.append((src, n_routed, dt_first, dt_last, doc.n, doc.n_files, doc.n_partitions,
+                    used, _hits(rows), lines - with_dt, completed_at, run_id))
+    return out
 
 
 def run_pipeline_resumable(
@@ -151,69 +277,16 @@ def run_pipeline_resumable(
     if todo.isEmpty():
         return {"skipped": True, "run_id": run_id, "n_new_sources": 0}
 
-    result = run_pipeline(todo, enrichment, cfg, out_dir=out_dir)
-    # lineage keys off the INPUT sources: a source whose docs yield zero
-    # messages (all lines datetime-less) is still "completed" — otherwise
-    # it would be reprocessed on every resume
-    msg_agg = result["enriched"].groupBy("source").agg(
-        F.count("*").alias("n_messages"),
-        F.min("ts").alias("dt_first"),
-        F.max("ts").alias("dt_last"),
-        F.array_distinct(F.collect_set("pattern_id")).alias("patterns_used"),
-    )
-    # per-DTPD hit/miss metrics (north_star: "parse hit/miss rates per
-    # DTPD pattern"): line-grained counts per pattern, bounded by
-    # |sources| × |DTPD table| rows — misses are the pattern_id = -1 lines
-    pat = result["parsed_lines"].groupBy("source", "pattern_id").agg(
-        F.count("*").alias("n")
-    )
-    pat_agg = pat.groupBy("source").agg(
-        F.map_from_entries(
-            F.filter(
-                F.collect_list(F.struct("pattern_id", "n")),
-                lambda s: s["pattern_id"] >= 0,
-            )
-        ).alias("pattern_hits"),
-        F.sum(F.when(F.col("pattern_id") < 0, F.col("n")).otherwise(0)).alias(
-            "n_lines_missed"
-        ),
-    )
-    # per-partition/file provenance from the INPUT side (north_star:
-    # "per-partition lineage and metrics — files/partitions processed");
-    # non-deterministic exprs must be projected before aggregation
-    doc_agg = (
-        todo.withColumn("_file", F.input_file_name())
-        .withColumn("_pid", F.spark_partition_id())
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.countDistinct("_file").alias("n_input_files"),
-            F.countDistinct("_pid").alias("n_partitions"),
-        )
-    )
-    lineage = (
-        todo.select("source")
-        .distinct()
-        .join(msg_agg, "source", "left")
-        .join(doc_agg, "source", "left")
-        .join(pat_agg, "source", "left")
-        .withColumn("n_messages", F.coalesce(F.col("n_messages"), F.lit(0)))
-        .withColumn("patterns_used", F.coalesce(F.col("patterns_used"), F.array().cast("array<int>")))
-        .withColumn(
-            "pattern_hits",
-            F.coalesce(F.col("pattern_hits"), F.expr("map()").cast("map<int,bigint>")),
-        )
-        .withColumn("n_lines_missed", F.coalesce(F.col("n_lines_missed"), F.lit(0)))
-        .withColumn("completed_at", F.lit(time.time()))
-        .withColumn("run_id", F.lit(run_id))
-        .select(*[c.split(" ")[0] for c in MANIFEST_SCHEMA.replace("\n", "").split(", ")])
-    )
-    # materialize BEFORE appending: the lineage plan reads the manifest it
-    # is about to extend (lazy re-scan would anti-join away its own rows)
-    lineage_rows = lineage.collect()
-    spark.createDataFrame(lineage_rows, lineage.schema).write.mode("append").parquet(
+    _, stats, kernel = _run(todo, enrichment, cfg, out_dir)
+    # the rows are built on the driver from the collected stats, so the
+    # append never re-reads the manifest it extends
+    lineage_rows = _lineage_rows(stats, run_id)
+    spark.createDataFrame(lineage_rows, MANIFEST_SCHEMA).write.mode("append").parquet(
         _manifest_path(checkpoint_dir)
     )
+    # blocking: the cached blocks are gone when the call returns, so no
+    # block removal runs on into the caller's next job
+    kernel.unpersist(blocking=True)
     metrics = {
         "skipped": False,
         "run_id": run_id,

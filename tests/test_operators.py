@@ -35,18 +35,32 @@ UTC = timezone.utc
 
 
 # ---------------------------------------------------------------- yearfix
-def test_year_rollover(spark):
-    from super_speedy_syslog_searcher_spark.plans.pipeline import PipelineConfig, parse_stage, messages_stage
-
-    docs_pd, golden = gen_year_rollover_doc()
-    docs = spark.createDataFrame(docs_pd, schema="doc_id string, tokens array<int>, n_tok int, source string")
-    cfg = PipelineConfig(reference_year=REFERENCE_YEAR)
-    msgs = messages_stage(parse_stage(docs, cfg), cfg).toPandas().sort_values("msg_no")
-    got = list(msgs["ts"])
+def _rollover_years_match_golden(msgs, golden):
+    got = list(msgs.toPandas().sort_values("msg_no")["ts"])
     exp = [t.to_pydatetime().replace(tzinfo=None) for t in pd.to_datetime(golden["ts_expect"])]
     assert [g.to_pydatetime() for g in pd.to_datetime(got)] == exp
     # Dec rows really did get REFERENCE_YEAR-1
     assert got[0].year == REFERENCE_YEAR - 1 and got[-1].year == REFERENCE_YEAR
+
+
+def test_year_rollover(spark):
+    from super_speedy_syslog_searcher_spark.plans.pipeline import PipelineConfig, run_pipeline
+
+    docs_pd, golden = gen_year_rollover_doc()
+    docs = spark.createDataFrame(docs_pd, schema="doc_id string, tokens array<int>, n_tok int, source string")
+    lookup = spark.createDataFrame([("rollover.000", "kern", "info")], "source string, facility string, severity string")
+    res = run_pipeline(docs, lookup, PipelineConfig(reference_year=REFERENCE_YEAR))
+    _rollover_years_match_golden(res["messages"], golden)
+
+
+def test_parse_messages_fused_year_rollover(spark):
+    """The bench, streaming and merge path applies the same year fix as
+    the pipeline: Dec lines of a Dec→Jan doc get the previous year."""
+    from super_speedy_syslog_searcher_spark.functions.parse import parse_messages_fused
+
+    docs_pd, golden = gen_year_rollover_doc()
+    docs = spark.createDataFrame(docs_pd, schema="doc_id string, tokens array<int>, n_tok int, source string")
+    _rollover_years_match_golden(parse_messages_fused(docs, reference_year=REFERENCE_YEAR), golden)
 
 
 def test_yearfix_pure():
@@ -64,6 +78,46 @@ def test_yearfix_pure():
     )
     out = fix_years_pdf(pdf, 2024)
     assert list(out["ts"].dt.year) == [2023, 2024, 2024]
+
+
+@pytest.mark.parametrize("reference_year", [2023, 2024])
+def test_fix_years_batch_equals_per_doc(reference_year):
+    """One pass over a batch of docs ≡ ``fix_years_pdf`` doc by doc, on
+    random docs mixing no-year and year-bearing patterns, with Dec→Jan
+    rollovers (several per doc), Feb 29 rows before a rollover (no Feb 29
+    in the year before a leap reference year: the uniform-year value
+    stays) and sub-second timestamps."""
+    import numpy as np
+
+    from super_speedy_syslog_searcher_spark.functions.parse import NOYEAR_PATTERN_IDS
+    from super_speedy_syslog_searcher_spark.operators.yearfix import fix_years_batch, fix_years_pdf
+
+    rng = np.random.default_rng(reference_year)
+    leap = reference_year % 4 == 0
+    starts = ["12-30 20:00:00", "12-31 23:00:00", "06-15 08:00:00"] + (["02-28 22:00:00"] if leap else [])
+    rows = []
+    for d in range(40):
+        t = pd.Timestamp(f"{reference_year}-{starts[d % len(starts)]}", tz="UTC")
+        for i in range(int(rng.integers(1, 12))):
+            if rng.random() < 0.15:  # jump ahead to the next Dec 31: another rollover
+                t = pd.Timestamp(f"{reference_year}-12-31 23:30:00", tz="UTC")
+            t += pd.Timedelta(seconds=int(rng.integers(0, 30000)), microseconds=int(rng.integers(0, 10**6)))
+            # a no-year format prints only month-day: parsed at the reference year
+            ts = t.replace(year=reference_year)
+            pid = int(rng.choice([NOYEAR_PATTERN_IDS[0], NOYEAR_PATTERN_IDS[-1], 0]))
+            rows.append({"doc_id": f"d{d:02d}", "msg_no": i + 1, "ts": ts, "pattern_id": pid})
+    pdf = pd.DataFrame(rows)
+    per_doc = pd.concat(
+        [fix_years_pdf(g.reset_index(drop=True), reference_year) for _, g in pdf.groupby("doc_id", sort=False)],
+        ignore_index=True,
+    )
+    batch = fix_years_batch(pdf, reference_year)
+    assert list(batch["ts"]) == list(per_doc["ts"])
+    years = batch["ts"].dt.year
+    assert (years == reference_year - 1).any() and (years < reference_year - 1).any()
+    if leap:
+        feb29 = (batch["ts"].dt.month == 2) & (batch["ts"].dt.day == 29)
+        assert feb29.any() and (batch.loc[feb29, "ts"].dt.year == reference_year).all()
 
 
 # ---------------------------------------------------------------- filters

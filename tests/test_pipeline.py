@@ -151,3 +151,125 @@ def test_sessionize_edge_shapes(spark):
     il = sorted(got["interleaved"], key=lambda r: r["msg_no"])
     assert [m["n_lines"] for m in il] == [2, 1]
     assert il[0]["text"].startswith("2024-01-05T10:00:00Z x")
+
+
+# ---------------------------------------------------------------------------
+# equivalence with the line-grained composition the fused kernel replaced
+# ---------------------------------------------------------------------------
+WINDOWS = {
+    "full": (None, None),
+    "2h": (datetime(2023, 6, 1, 6, tzinfo=timezone.utc), datetime(2023, 6, 1, 8, tzinfo=timezone.utc)),
+}
+
+
+def _line_grained_run(docs, lookup, cfg, out):
+    """The pipeline as composed before the fused kernel, from the operators
+    that remain: line parse → sessionize shuffle → infer_years shuffle →
+    window → enrich, the line-level summary and hit/miss aggregates, and
+    the lineage rows aggregated from the routed rows, the parsed lines and
+    the input scan."""
+    from super_speedy_syslog_searcher_spark.functions.parse import parse_docs_fused
+    from super_speedy_syslog_searcher_spark.operators.enrich import enrich
+    from super_speedy_syslog_searcher_spark.operators.filters import dt_between
+    from super_speedy_syslog_searcher_spark.operators.route import route_write, sink_counts
+    from super_speedy_syslog_searcher_spark.operators.sessionize import sessionize
+    from super_speedy_syslog_searcher_spark.operators.summary import pattern_hit_miss, source_summary
+    from super_speedy_syslog_searcher_spark.operators.yearfix import infer_years
+
+    parsed = parse_docs_fused(docs, reference_year=cfg.reference_year)
+    msgs = dt_between(infer_years(sessionize(parsed), cfg.reference_year), cfg.dt_a, cfg.dt_b)
+    enriched = enrich(msgs, lookup)
+    route_write(enriched, f"{out}/routed")
+    sink_counts(enriched).write.parquet(f"{out}/sink_counts")
+    source_summary(parsed, msgs).write.parquet(f"{out}/summary")
+    pattern_hit_miss(parsed).write.parquet(f"{out}/pattern_counts")
+
+    msg_agg = enriched.groupBy("source").agg(
+        F.count("*").alias("n_messages"),
+        F.min("ts").alias("dt_first"),
+        F.max("ts").alias("dt_last"),
+        F.array_distinct(F.collect_set("pattern_id")).alias("patterns_used"),
+    )
+    pat = parsed.groupBy("source", "pattern_id").agg(F.count("*").alias("n"))
+    pat_agg = pat.groupBy("source").agg(
+        F.map_from_entries(
+            F.filter(F.collect_list(F.struct("pattern_id", "n")), lambda s: s["pattern_id"] >= 0)
+        ).alias("pattern_hits"),
+        F.sum(F.when(F.col("pattern_id") < 0, F.col("n")).otherwise(0)).alias("n_lines_missed"),
+    )
+    doc_agg = (
+        docs.withColumn("_file", F.input_file_name())
+        .withColumn("_pid", F.spark_partition_id())
+        .groupBy("source")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.countDistinct("_file").alias("n_input_files"),
+            F.countDistinct("_pid").alias("n_partitions"),
+        )
+    )
+    lineage = (
+        docs.select("source").distinct()
+        .join(msg_agg, "source", "left")
+        .join(doc_agg, "source", "left")
+        .join(pat_agg, "source", "left")
+        .withColumn("n_messages", F.coalesce(F.col("n_messages"), F.lit(0)))
+        .withColumn("patterns_used", F.coalesce(F.col("patterns_used"), F.array().cast("array<int>")))
+        .withColumn("pattern_hits", F.coalesce(F.col("pattern_hits"), F.expr("map()").cast("map<int,bigint>")))
+        .withColumn("n_lines_missed", F.coalesce(F.col("n_lines_missed"), F.lit(0)))
+        .withColumn("completed_at", F.lit(0.0))
+        .withColumn("run_id", F.lit("old"))
+        .select("source", "n_messages", "dt_first", "dt_last", "n_docs", "n_input_files", "n_partitions",
+                "patterns_used", "pattern_hits", "n_lines_missed", "completed_at", "run_id")
+    )
+    spark = docs.sparkSession
+    spark.createDataFrame(lineage.collect(), lineage.schema).write.parquet(f"{out}/manifest")
+
+
+def _table(path, drop=()):
+    """A written table as (arrow schema, rows sorted); list cells become
+    tuples, sorted for the manifest's set- and map-valued columns."""
+    import pyarrow.dataset as pads
+
+    table = pads.dataset(path, format="parquet", partitioning="hive").to_table()
+    cols = [c for c in table.column_names if c not in drop]
+    unordered = {"patterns_used", "pattern_hits"}
+    values = [
+        [None if v is None else tuple(sorted(v) if c in unordered else v) if isinstance(v, list) else v
+         for v in table.column(c).to_pylist()]
+        for c in cols
+    ]
+    return table.schema, sorted(zip(*values), key=repr)
+
+
+@pytest.mark.parametrize("window", sorted(WINDOWS))
+def test_resumable_run_equals_line_grained_composition(spark, tmp_path, window):
+    """Routed rows, sink_counts, summary, pattern_counts and the manifest
+    (less completed_at/run_id; patterns_used as a set) equal the
+    line-grained composition's, with equal parquet schemas, on a skewed
+    corpus plus a Dec→Jan doc, over the full window and a 2 h one."""
+    from super_speedy_syslog_searcher_spark.plans.pipeline import run_pipeline_resumable
+    from super_speedy_syslog_searcher_spark.sources.tokenized import gen_year_rollover_doc
+
+    docs_pd, enrich_pd, _ = gen_corpus(n_docs=48, lines_per_doc=8, n_sources=12, seed=11, skew=True)
+    roll_pd, _ = gen_year_rollover_doc()
+    docs_pd = pd.concat([docs_pd, roll_pd], ignore_index=True)
+    assert docs_pd["source"].str.startswith("nodt.").any()
+    docs = spark.createDataFrame(docs_pd, schema=DOCS_SCHEMA)
+    lookup = spark.createDataFrame(enrich_pd, schema=ENRICH_SCHEMA)  # rollover.000 takes the default sink
+    a, b = WINDOWS[window]
+    cfg = PipelineConfig(reference_year=REFERENCE_YEAR, dt_a=a, dt_b=b)
+
+    old, new = str(tmp_path / "old"), str(tmp_path / "new")
+    _line_grained_run(docs, lookup, cfg, old)
+    assert not run_pipeline_resumable(docs, lookup, cfg, new, f"{new}/ckpt", run_id="new")["skipped"]
+
+    for name in ("routed", "sink_counts", "summary", "pattern_counts"):
+        want_schema, want = _table(f"{old}/{name}")
+        got_schema, got = _table(f"{new}/{name}")
+        assert got_schema.equals(want_schema, check_metadata=True), name
+        assert got == want, name
+        assert len(got) > 0, name
+    want_schema, want = _table(f"{old}/manifest", drop=("completed_at", "run_id"))
+    got_schema, got = _table(f"{new}/ckpt/manifest", drop=("completed_at", "run_id"))
+    assert got_schema.equals(want_schema, check_metadata=True)
+    assert got == want
